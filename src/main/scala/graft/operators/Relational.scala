@@ -196,7 +196,7 @@ object Relational {
     * checkpoint per stage truncates the chain like [[funnel]].
     *
     * Construction is EAGER: each stage's `localCheckpoint` and each
-    * transition's `distributedRank` (zipWithIndex + range sampling)
+    * transition's `distributedRank` (offset pass + range sampling)
     * launch jobs at DataFrame-BUILD time, so building an s-stage
     * funnel runs s-1 shuffle+count job sets even if the returned
     * frame is never acted on. Fine for the intended use (build one,

@@ -1,7 +1,10 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Cluster-scale join patterns: co-located bucketed joins (pre-shuffled
   * storage, zero exchange at query time) and salted joins (hot-key
@@ -11,12 +14,11 @@ import org.apache.spark.sql.functions._
   */
 object ScaleOps {
 
-  /** Cap on distinct group keys per partition in the grouped
-    * primitives' offset pass ([[groupedRank]]/[[groupedCumSum]]/
-    * [[groupedFill]]). Those passes collect per-partition PER-GROUP
-    * state to the driver — KB-scale when `groupCols` is schema-bounded
-    * (years, languages, sources, nations), a silent driver OOM when a
-    * caller passes an entity key. The guard turns the OOM into a fast,
+  /** Cap on distinct group keys per partition in [[scan]]'s offset
+    * pass, which collects per-partition PER-GROUP state to the driver —
+    * KB-scale when `groupCols` is schema-bounded (years, languages,
+    * sources, nations), a silent driver OOM when a caller passes an
+    * entity key. The guard turns the OOM into a fast,
     * named failure in the offset job itself, before anything is
     * collected. 100 k entries per partition is ~100× any legitimate
     * bounded key set and far below driver danger (a few MB total).
@@ -60,8 +62,7 @@ object ScaleOps {
     * the running total crosses [[MaxGroupsTotal]] — so the driver
     * never buffers more than the cap plus the in-flight task results,
     * closing the regime the executor-side per-partition cap cannot
-    * see. Shared by all three grouped primitives so the guard cannot
-    * drift between them.
+    * see.
     */
   private def collectOffsetsGuarded[T](op: String,
       rdd: org.apache.spark.rdd.RDD[(Int, Vector[T])]): Array[Vector[T]] = {
@@ -188,144 +189,143 @@ object ScaleOps {
   def compact(df: DataFrame, targetFileBytes: Long): DataFrame =
     df.repartition(compactionPartitions(df, targetFileBytes))
 
-  /** Global dense row-numbering WITHOUT a single-partition window — the
-    * reusable primitive the statistics queries reach for instead of
-    * `row_number().over(Window.orderBy(...))` on fact-grain rows (which
-    * moves the whole frame to one task).
-    *
-    * Plan: range-shuffle on the order columns (each partition owns a
-    * contiguous key range), sort within partitions, then
-    * `RDD.zipWithIndex` — its count job and its map job run over the
-    * SAME shuffled RDD, so the scheduler skips the shuffle-map stage on
-    * the second job and the upstream plan computes exactly once. (The
-    * pure-SQL formulation — a second aggregate subtree for partition
-    * counts joined back as offsets — recomputes the whole upstream:
-    * column pruning slims the counts-side exchange so ReuseExchange
-    * never matches. This is the one genuinely per-partition-imperative
-    * step in the repo, i.e. the RDD escape hatch used as intended.)
-    *
-    * `orderCols` must be a TOTAL order (include a unique tie-break key,
-    * e.g. the row's primary key) — exact ties that straddle a range
-    * boundary would otherwise get nondeterministic ranks.
-    *
-    * Side effect: `zipWithIndex` launches its count job EAGERLY, at
-    * call time, not at the returned DataFrame's first action. Plan
-    * branches that reuse the result re-execute only the post-shuffle
-    * map (shuffle files are reused), so multi-branch consumers pay
-    * extra map work, not a recompute; if more multi-branch call sites
-    * appear, persist the zipped RDD before createDataFrame.
-    *
-    * Cost note: `repartitionByRange` runs RangePartitioner's SAMPLING
-    * pass over the input before the shuffle map stage, so the upstream
-    * plan executes ~twice per call (sample + map). For the entity-grain
-    * aggregates this primitive targets that is one extra cheap
-    * aggregation; a caller ranking an EXPENSIVE upstream should
-    * `localCheckpoint` the input first so both passes read the
-    * materialized frame.
+  /** What a [[scan]] threads along each group's rows. `step` folds one
+    * row into the carry; `merge` appends a later partition's summary
+    * (a fold from `zero` over a non-empty run) to an earlier carry, so
+    * that `merge(s, fold(step, zero, run)) == fold(step, s, run)`;
+    * `emit` turns the carry before and after a row, plus the group's
+    * final total, into the row's appended values.
     */
-  def distributedRank(df: DataFrame, orderCols: Seq[Column],
-                      rankCol: String = "rk",
-                      partitions: Int = 0): DataFrame = {
-    require(!df.columns.contains(rankCol),
-      s"distributedRank: column $rankCol already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(n, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val schema = org.apache.spark.sql.types.StructType(
-      ranged.schema.fields :+ org.apache.spark.sql.types.StructField(
-        rankCol, org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = ranged.rdd.zipWithIndex().map { case (r, i) =>
-      Row.fromSeq(r.toSeq :+ (i + 1L)) }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
+  private final case class Carry[S](zero: S, step: (S, Row) => S,
+      merge: (S, S) => S, emit: (S, S, S) => Seq[Any])
 
-  /** Rank WITHIN bounded groups without a per-group single-task sort —
-    * the grouped sibling of [[distributedRank]]. A window partitioned
-    * by a LOW-cardinality key (year, language, event type, key-column
-    * label) over entity/fact-grain rows is the same 100 TB hazard as
-    * an unpartitioned window, just split across k tasks for schema-
-    * bounded k: `row_number().over(Window.partitionBy(yr).orderBy(...))`
-    * with two years pushes half the frame through each of TWO tasks.
+  /** Rank carry: emits (rank, group size). */
+  private val Count = Carry[Long](0L, (c, _) => c + 1L, _ + _,
+    (_, c, n) => Seq(c, n))
+
+  private def countAndSum(vIdx: Int) = Carry[(Long, Long)]((0L, 0L),
+    { case ((c, s), r) => (c + 1L, s + r.getLong(vIdx)) },
+    { case ((c1, s1), (c2, s2)) => (c1 + c2, s1 + s2) },
+    (_, cs, _) => Seq(cs._1, cs._2))
+
+  private def longCol(name: String) = StructField(name, LongType, nullable = false)
+
+  /** The two-pass scan behind every rank, running-sum and carry
+    * primitive here — the scale-safe form of an ordered window, which
+    * puts a whole group (or, with no `groupCols`, the whole frame) in
+    * one task.
     *
-    * Plan: range shuffle on (groupCols ++ orderCols) — group runs are
-    * contiguous — then the same two-job anatomy as [[groupedCumSum]]
-    * over the SAME shuffled RDD (shuffle files reused): (1)
-    * per-partition PER-GROUP row counts collected to the driver
-    * (numPartitions × bounded-groups entries, KB-scale; guarded by
-    * [[MaxGroupsPerPartition]] executor-side and [[MaxGroupsTotal]]
-    * driver-side — past either cap the offset job fails fast instead
-    * of OOMing the driver) and scanned into exclusive
-    * per-group offsets plus group totals; (2) an offset-seeded
-    * per-partition counter. Rank-in-group comes back as `rankCol`,
-    * the group total as `countCol` (every quantile/ntile consumer
-    * needs it). `groupCols` must be a BOUNDED key set:
-    * dimension/calendar-grain, never an entity key — for entity keys
-    * use a plain partitioned window, which is already scale-safe.
-    * A NULL group key is an ordinary group (exactly like
-    * `row_number().over(Window.partitionBy(g))`, which puts all
-    * null-keyed rows in one partition). Eager like zipWithIndex:
-    * job (1) runs at call time. Determinism caveat: see
-    * [[distributedCumSum]] — for a NONDETERMINATE upstream,
-    * `localCheckpoint` the input first.
+    * Plan: range shuffle on (groupCols ++ orderCols) and a sort within
+    * partitions, so each group's rows form contiguous runs; then two
+    * jobs over the SAME shuffled RDD (the second reuses the shuffle
+    * files): (1) a per-partition, per-group summary (`carry` folded from
+    * `zero`), collected to the driver under both bounded-group guards
+    * ([[MaxGroupsPerPartition]] per partition, [[MaxGroupsTotal]] in
+    * total) and scanned into exclusive per-(partition, group) seeds —
+    * only for the groups each partition holds, so the broadcast is
+    * O(groups + partitions) — plus per-group totals; (2) a seeded fold
+    * that appends `carry.emit`'s values as the `out` columns. (The
+    * pure-SQL form — a second aggregate subtree joined back as offsets
+    * — recomputes the whole upstream: column pruning slims its exchange
+    * so ReuseExchange never matches.)
+    *
+    * `groupCols` must be a BOUNDED key set (dimension/calendar grain,
+    * never an entity key: for entity keys use a plain partitioned
+    * window, which is already scale-safe). A NULL group key is an
+    * ordinary group, as in `Window.partitionBy`. (groupCols ++
+    * orderCols) must be a TOTAL order (include a unique tie-break key):
+    * exact ties that straddle a range boundary would otherwise fold in
+    * a nondeterministic order.
+    *
+    * Eager: job (1) runs at call time, not at the returned DataFrame's
+    * first action. `repartitionByRange` also samples its input first,
+    * so the upstream plan runs about twice; `localCheckpoint` an
+    * expensive upstream before calling.
+    *
+    * Determinism caveat: both jobs assume they read the same shuffled
+    * rows. If map partitions are RECOMPUTED (executor loss) over a
+    * nondeterminate upstream — sampling, [[saltedJoin]]'s
+    * `acceptIndeterminateSalt` mode, round-robin `repartition(n)` — the
+    * second pass can see different rows than the seeds were computed
+    * from and silently emit wrong values. For such an input,
+    * `localCheckpoint` it first so both passes read the materialized
+    * frame.
     */
-  def groupedRank(df: DataFrame, groupCols: Seq[String],
-                  orderCols: Seq[Column], rankCol: String = "rk",
-                  countCol: String = "n_grp",
-                  partitions: Int = 0): DataFrame = {
-    require(groupCols.nonEmpty, "groupedRank needs at least one group column")
-    require(!df.columns.contains(rankCol) && !df.columns.contains(countCol),
-      s"groupedRank: output column $rankCol/$countCol already exists")
+  private def scan[S](op: String, df: DataFrame, groupCols: Seq[String],
+      orderCols: Seq[Column], partitions: Int, out: Seq[StructField],
+      carry: Carry[S]): DataFrame = {
+    require(!out.exists(f => df.columns.contains(f.name)),
+      s"$op: output column ${out.map(_.name).mkString("/")} already exists")
     val n = if (partitions > 0) partitions
             else df.sparkSession.sessionState.conf.numShufflePartitions
     val ordered = groupCols.map(col(_).asc) ++ orderCols
     val ranged = df.repartitionByRange(n, ordered: _*)
       .sortWithinPartitions(ordered: _*)
     val gIdx = groupCols.map(ranged.schema.fieldIndex)
-    val rdd0 = ranged.rdd
-    val perPart = collectOffsetsGuarded("groupedRank",
-      rdd0.mapPartitionsWithIndex { (i, it) =>
-        val m = scala.collection.mutable.LinkedHashMap[Seq[Any], Long]()
+    val rows = ranged.rdd
+    val perPart = collectOffsetsGuarded(op,
+      rows.mapPartitionsWithIndex { (i, it) =>
+        val m = mutable.LinkedHashMap[Seq[Any], S]()
         it.foreach { r =>
           val k = gIdx.map(r.get)
-          m(k) = m.getOrElse(k, 0L) + 1L
-          requireBoundedGroups("groupedRank", m.size)
+          m(k) = carry.step(m.getOrElse(k, carry.zero), r)
+          requireBoundedGroups(op, m.size)
         }
         Iterator((i, m.toVector))
       })
-    // group totals (the countCol payload) and exclusive per-(partition,
-    // group) rank offsets — the only driver-side state, bounded by
-    // numPartitions × bounded-groups entries
-    val totals = scala.collection.mutable.HashMap[Seq[Any], Long]()
-    perPart.foreach(_.foreach { case (k, c) =>
-      totals(k) = totals.getOrElse(k, 0L) + c })
-    val running = scala.collection.mutable.HashMap[Seq[Any], Long]()
-    val offsets: Array[Map[Seq[Any], Long]] = perPart.map { m =>
-      val snapshot = m.map { case (k, _) =>
-        k -> running.getOrElse(k, 0L) }.toMap
-      m.foreach { case (k, c) => running(k) = running.getOrElse(k, 0L) + c }
-      snapshot
+    val totals = mutable.HashMap[Seq[Any], S]()
+    val seeds: Array[Map[Seq[Any], S]] = perPart.map { m =>
+      val seed = m.map { case (k, _) =>
+        k -> totals.getOrElse(k, carry.zero) }.toMap
+      m.foreach { case (k, s) =>
+        totals(k) = carry.merge(totals.getOrElse(k, carry.zero), s) }
+      seed
     }
-    val offB = df.sparkSession.sparkContext.broadcast(offsets)
-    val totB = df.sparkSession.sparkContext.broadcast(totals.toMap)
-    val schema = org.apache.spark.sql.types.StructType(
-      ranged.schema.fields :+
-        org.apache.spark.sql.types.StructField(rankCol,
-          org.apache.spark.sql.types.LongType, nullable = false) :+
-        org.apache.spark.sql.types.StructField(countCol,
-          org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      val st = scala.collection.mutable.HashMap[Seq[Any], Long]()
-      offB.value(i).foreach { case (k, v) => st(k) = v }
-      val tot = totB.value
+    val seedB = df.sparkSession.sparkContext.broadcast((seeds, totals.toMap))
+    val emitted = rows.mapPartitionsWithIndex { (i, it) =>
+      val (seed, total) = seedB.value
+      val st = mutable.HashMap[Seq[Any], S]() ++= seed(i)
       it.map { r =>
         val k = gIdx.map(r.get)
-        val rk = st.getOrElse(k, 0L) + 1L
-        st(k) = rk
-        Row.fromSeq(r.toSeq :+ rk :+ tot(k))
+        val before = st(k)
+        val after = carry.step(before, r)
+        st(k) = after
+        Row.fromSeq(r.toSeq ++ carry.emit(before, after, total(k)))
       }
     }
-    df.sparkSession.createDataFrame(rdd, schema)
+    df.sparkSession.createDataFrame(emitted,
+      StructType(ranged.schema.fields ++ out))
+  }
+
+  /** Global dense row-numbering WITHOUT a single-partition window — the
+    * reusable primitive the statistics queries reach for instead of
+    * `row_number().over(Window.orderBy(...))` on fact-grain rows (which
+    * moves the whole frame to one task). The ungrouped [[scan]] with a
+    * count carry; `orderCols` must be a total order. Returns the
+    * 1-based position as non-null LongType `rankCol`.
+    */
+  def distributedRank(df: DataFrame, orderCols: Seq[Column],
+                      rankCol: String = "rk",
+                      partitions: Int = 0): DataFrame =
+    scan("distributedRank", df, Nil, orderCols, partitions,
+      Seq(longCol(rankCol)), Count.copy[Long](emit = (_, c, _) => Seq(c)))
+
+  /** Rank WITHIN bounded groups without a per-group single-task sort —
+    * the grouped sibling of [[distributedRank]]. A window partitioned
+    * by a LOW-cardinality key (year, language, event type) over
+    * entity/fact-grain rows is the same hazard as an unpartitioned
+    * window, just split across k tasks for schema-bounded k. The
+    * [[scan]] with a count carry: rank-in-group comes back as
+    * `rankCol`, the group total as `countCol` (every quantile/ntile
+    * consumer needs it), both non-null LongType.
+    */
+  def groupedRank(df: DataFrame, groupCols: Seq[String],
+                  orderCols: Seq[Column], rankCol: String = "rk",
+                  countCol: String = "n_grp",
+                  partitions: Int = 0): DataFrame = {
+    require(groupCols.nonEmpty, "groupedRank needs at least one group column")
+    scan("groupedRank", df, groupCols, orderCols, partitions,
+      Seq(longCol(rankCol), longCol(countCol)), Count)
   }
 
   /** SQL `ntile(k)` bucket recovered from a pre-computed global rank —
@@ -358,238 +358,80 @@ object ScaleOps {
       .otherwise(rem + idiv(rk - cutoff + greatest(base, lit(1L)) - 1L,
         greatest(base, lit(1L))))
   }
-
   /** Exact global running sum (prefix sum / cumulative sum) of
-    * `valueCol` (LongType) along the total order `orderCols`, with no
+    * `valueCol` along the total order `orderCols`, with no
     * single-partition window — the scale-safe form of
     * `sum(v).over(Window.orderBy(...).rowsBetween(unboundedPreceding,
     * currentRow))` for ABC/Pareto cumulative-share queries whose order
     * key (e.g. per-part revenue) is near-unique, so the value-grain
     * cumulative trick (q269/q300) would degenerate back to the full
-    * entity frame.
-    *
-    * Plan: range-shuffle on the order columns, sort within partitions,
-    * then TWO jobs over the SAME shuffled RDD (the scheduler reuses the
-    * shuffle files, as in [[distributedRank]]): (1) per-partition value
-    * totals — numPartitions longs to the driver, KB-scale at any data
-    * size — scanned into exclusive per-partition offsets; (2) a
-    * per-partition running sum seeded with the partition's offset.
-    * Both the rank (`rankCol`) and the inclusive running sum (`cumCol`)
+    * entity frame. The ungrouped [[scan]] with a (count, sum) carry:
+    * both the rank (`rankCol`) and the inclusive running sum (`cumCol`)
     * come back, since every cumulative-share consumer also wants the
-    * position. Eager like zipWithIndex: job (1) runs at call time.
-    *
-    * `orderCols` must be a TOTAL order (include a unique tie-break
-    * key); `valueCol` must be a non-null LongType column.
-    *
-    * Determinism caveat (applies to every two-pass primitive here,
-    * incl. [[groupedRank]]/[[groupedCumSum]]/[[groupedFill]] and
-    * [[distributedRank]]'s zipWithIndex): the offset job and the
-    * output job assume they read the SAME shuffled rows. Normally the
-    * shuffle files are reused, but if map partitions are RECOMPUTED
-    * (executor loss) over a nondeterminate upstream — sampling,
-    * [[saltedJoin]]'s `acceptIndeterminateSalt` mode, round-robin
-    * `repartition(n)` — the second pass can see different rows than
-    * the offsets were computed from, silently corrupting the seeded
-    * sums/carries. For a nondeterminate input, `localCheckpoint` it
-    * first so both passes read the materialized frame (the same rule
-    * saltedJoin documents for its indeterminate mode).
+    * position. `valueCol` must be a non-null LongType column.
     */
   def distributedCumSum(df: DataFrame, orderCols: Seq[Column],
                         valueCol: String, cumCol: String = "cum",
                         rankCol: String = "rk",
-                        partitions: Int = 0): DataFrame = {
-    require(!df.columns.contains(cumCol) && !df.columns.contains(rankCol),
-      s"distributedCumSum: output column $cumCol/$rankCol already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(n, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val vIdx = ranged.schema.fieldIndex(valueCol)
-    val rdd0 = ranged.rdd
-    // per-partition (rowCount, valueTotal): one pair per partition —
-    // the only driver-side state, bounded by the partition count
-    val perPart = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var c = 0L; var s = 0L
-      it.foreach { r => c += 1L; s += r.getLong(vIdx) }
-      Iterator((i, (c, s)))
-    }.collect().sortBy(_._1).map(_._2)
-    val cntOff = perPart.map(_._1).scanLeft(0L)(_ + _)
-    val sumOff = perPart.map(_._2).scanLeft(0L)(_ + _)
-    val schema = org.apache.spark.sql.types.StructType(
-      ranged.schema.fields :+
-        org.apache.spark.sql.types.StructField(rankCol,
-          org.apache.spark.sql.types.LongType, nullable = false) :+
-        org.apache.spark.sql.types.StructField(cumCol,
-          org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      var rk = cntOff(i); var run = sumOff(i)
-      it.map { r =>
-        rk += 1L; run += r.getLong(vIdx)
-        Row.fromSeq(r.toSeq :+ rk :+ run)
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
-  }
+                        partitions: Int = 0): DataFrame =
+    scan("distributedCumSum", df, Nil, orderCols, partitions,
+      Seq(longCol(rankCol), longCol(cumCol)),
+      countAndSum(df.schema.fieldIndex(valueCol)))
 
   /** Grouped exact running sum — the grouped sibling of
-    * [[distributedCumSum]] and the cumulative sibling of
-    * [[groupedRank]]: `sum(v).over(Window.partitionBy(g).orderBy(...)
-    * .rowsBetween(unboundedPreceding, currentRow))` sorts and prefix-
-    * sums each group in ONE task, which for a schema-bounded group key
-    * (sources, years, types) over entity/fact-grain rows is the same
-    * single-task hazard as the unpartitioned form (the "mega-source
-    * serializes its partition" caveat the token-budget fill used to
-    * carry).
-    *
-    * Plan: range shuffle on (groupCols ++ orderCols) — group runs are
-    * contiguous — then TWO jobs over the SAME shuffled RDD: (1)
-    * per-partition PER-GROUP (count, total), collected to the driver
-    * (numPartitions × groups-per-partition entries; groups are
-    * schema-bounded, so KB-scale — enforced at runtime by
-    * [[MaxGroupsPerPartition]] and [[MaxGroupsTotal]]) and scanned
-    * into exclusive offsets;
-    * (2) a per-partition running state seeded with each group's
-    * offset. Returns rank-in-group (`rankCol`) and the inclusive
-    * per-group running sum (`cumCol`), both LongType.
-    *
-    * `groupCols` must be a BOUNDED key set; `orderCols` must make
-    * (groupCols ++ orderCols) a total order; `valueCol` non-null
-    * LongType. Eager like zipWithIndex: job (1) runs at call time.
+    * [[distributedCumSum]]: `sum(v).over(Window.partitionBy(g)
+    * .orderBy(...).rowsBetween(unboundedPreceding, currentRow))` sorts
+    * and prefix-sums each group in ONE task, which for a schema-bounded
+    * group key (sources, years, types) over entity/fact-grain rows is
+    * the same single-task hazard as the unpartitioned form. Returns
+    * rank-in-group (`rankCol`) and the inclusive per-group running sum
+    * (`cumCol`), both LongType; `valueCol` non-null LongType.
     */
   def groupedCumSum(df: DataFrame, groupCols: Seq[String],
                     orderCols: Seq[Column], valueCol: String,
                     cumCol: String = "cum", rankCol: String = "rk",
                     partitions: Int = 0): DataFrame = {
     require(groupCols.nonEmpty, "groupedCumSum needs a group column")
-    require(!df.columns.contains(cumCol) && !df.columns.contains(rankCol),
-      s"groupedCumSum: output column $cumCol/$rankCol already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ordered = groupCols.map(col(_).asc) ++ orderCols
-    val ranged = df.repartitionByRange(n, ordered: _*)
-      .sortWithinPartitions(ordered: _*)
-    val gIdx = groupCols.map(ranged.schema.fieldIndex)
-    val vIdx = ranged.schema.fieldIndex(valueCol)
-    val rdd0 = ranged.rdd
-    val perPart = collectOffsetsGuarded("groupedCumSum",
-      rdd0.mapPartitionsWithIndex { (i, it) =>
-        val m = scala.collection.mutable.LinkedHashMap[Seq[Any], (Long, Long)]()
-        it.foreach { r =>
-          val k = gIdx.map(r.get)
-          val (c, s) = m.getOrElse(k, (0L, 0L))
-          m(k) = (c + 1L, s + r.getLong(vIdx))
-          requireBoundedGroups("groupedCumSum", m.size)
-        }
-        Iterator((i, m.toVector))
-      })
-    // exclusive per-(partition, group) offsets: what accumulated in
-    // earlier partitions for the same group
-    val running = scala.collection.mutable.HashMap[Seq[Any], (Long, Long)]()
-    val offsets: Array[Map[Seq[Any], (Long, Long)]] = perPart.map { m =>
-      val snapshot = m.map { case (k, _) =>
-        k -> running.getOrElse(k, (0L, 0L)) }.toMap
-      m.foreach { case (k, (c, s)) =>
-        val (pc, ps) = running.getOrElse(k, (0L, 0L))
-        running(k) = (pc + c, ps + s)
-      }
-      snapshot
-    }
-    val offB = df.sparkSession.sparkContext.broadcast(offsets)
-    val schema = org.apache.spark.sql.types.StructType(
-      ranged.schema.fields :+
-        org.apache.spark.sql.types.StructField(rankCol,
-          org.apache.spark.sql.types.LongType, nullable = false) :+
-        org.apache.spark.sql.types.StructField(cumCol,
-          org.apache.spark.sql.types.LongType, nullable = false))
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      val st = scala.collection.mutable.HashMap[Seq[Any], (Long, Long)]()
-      offB.value(i).foreach { case (k, v) => st(k) = v }
-      it.map { r =>
-        val k = gIdx.map(r.get)
-        val (c, s) = st.getOrElse(k, (0L, 0L))
-        val nc = c + 1L; val ns = s + r.getLong(vIdx)
-        st(k) = (nc, ns)
-        Row.fromSeq(r.toSeq :+ nc :+ ns)
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
+    scan("groupedCumSum", df, groupCols, orderCols, partitions,
+      Seq(longCol(rankCol), longCol(cumCol)),
+      countAndSum(df.schema.fieldIndex(valueCol)))
   }
 
   /** Grouped forward-fill — `last(v, ignoreNulls).over(Window
     * .partitionBy(g).orderBy(...))` without the per-group single-task
     * sort: carries the most recent non-null `fillCol` value along the
     * total order within each bounded group (the as-of/carry idiom on
-    * any axis — time, size, rank). Same two-pass anatomy as
-    * [[groupedCumSum]]: range shuffle on (groupCols ++ orderCols),
-    * per-partition per-group LAST non-null (plus the partition's
-    * present-group set) collected to the driver (bounded groups ⇒ KB,
-    * enforced at runtime by [[MaxGroupsPerPartition]] /
-    * [[MaxGroupsTotal]]), each partition seeded with the running carry
-    * of exactly the groups IT CONTAINS (a group's last non-null may
-    * sit several partitions back; seeding by presence keeps the
-    * broadcast O(groups + partitions), not O(partitions × groups)),
-    * then an offset-seeded carry on the second pass over the same
-    * shuffle files. INCLUSIVE of the current row (the
-    * standard forward-fill frame unboundedPreceding..currentRow);
-    * rows whose own value is null receive the carry, so exclusive
-    * consumers that filter to null-valued rows see identical results.
-    * `outCol` has `fillCol`'s type, nullable (null until the group's
-    * first non-null).
+    * any axis — time, size, rank). INCLUSIVE of the current row (the
+    * standard frame unboundedPreceding..currentRow); rows whose own
+    * value is null receive the carry. `outCol` has `fillCol`'s type,
+    * nullable (null until the group's first non-null).
     */
   def groupedFill(df: DataFrame, groupCols: Seq[String],
                   orderCols: Seq[Column], fillCol: String,
                   outCol: String, partitions: Int = 0): DataFrame = {
     require(groupCols.nonEmpty, "groupedFill needs a group column")
-    require(!df.columns.contains(outCol),
-      s"groupedFill: output column $outCol already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ordered = groupCols.map(col(_).asc) ++ orderCols
-    val ranged = df.repartitionByRange(n, ordered: _*)
-      .sortWithinPartitions(ordered: _*)
-    val gIdx = groupCols.map(ranged.schema.fieldIndex)
-    val fIdx = ranged.schema.fieldIndex(fillCol)
-    val rdd0 = ranged.rdd
-    // per-partition (group -> last non-null, PLUS the set of all groups
-    // present — a group whose rows in this partition are all null still
-    // needs its carry seed, and seeding only the groups a partition
-    // actually contains keeps the broadcast O(groups + partitions), not
-    // O(partitions x groups)
-    val perPart = collectOffsetsGuarded("groupedFill",
-      rdd0.mapPartitionsWithIndex { (i, it) =>
-        val m = scala.collection.mutable.LinkedHashMap[Seq[Any], Any]()
-        val present = scala.collection.mutable.LinkedHashSet[Seq[Any]]()
-        it.foreach { r =>
-          val k = gIdx.map(r.get)
-          present += k
-          requireBoundedGroups("groupedFill", present.size)
-          val v = r.get(fIdx)
-          if (v != null) m(k) = v
-        }
-        Iterator((i, present.toVector.map(k => k -> m.getOrElse(k, null))))
-      })
-    val running = scala.collection.mutable.HashMap[Seq[Any], Any]()
-    val offsets: Array[Map[Seq[Any], Any]] = perPart.map { m =>
-      val snapshot = m.flatMap { case (k, _) =>
-        running.get(k).map(k -> _) }.toMap
-      m.foreach { case (k, v) => if (v != null) running(k) = v }
-      snapshot
-    }
-    val offB = df.sparkSession.sparkContext.broadcast(offsets)
-    val schema = org.apache.spark.sql.types.StructType(
-      ranged.schema.fields :+
-        ranged.schema(fIdx).copy(name = outCol, nullable = true))
-    val rdd = rdd0.mapPartitionsWithIndex { (i, it) =>
-      val st = scala.collection.mutable.HashMap[Seq[Any], Any]()
-      offB.value(i).foreach { case (k, v) => st(k) = v }
-      it.map { r =>
-        val k = gIdx.map(r.get)
-        val v = r.get(fIdx)
-        if (v != null) st(k) = v
-        Row.fromSeq(r.toSeq :+ st.getOrElse(k, null))
-      }
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val fIdx = df.schema.fieldIndex(fillCol)
+    scan("groupedFill", df, groupCols, orderCols, partitions,
+      Seq(df.schema(fIdx).copy(name = outCol, nullable = true)),
+      Carry[Any](null, (s, r) => if (r.isNullAt(fIdx)) s else r.get(fIdx),
+        (a, b) => if (b == null) a else b, (_, s, _) => Seq(s)))
+  }
+
+  /** Grouped lag — `lag(v).over(Window.partitionBy(g).orderBy(...))`
+    * without the per-group single-task sort: each row gets the
+    * previous row's `lagCol` value in its bounded group, nulls
+    * included (not skipped). `outCol` has `lagCol`'s type, nullable
+    * (null on each group's first row).
+    */
+  def groupedLag(df: DataFrame, groupCols: Seq[String],
+                 orderCols: Seq[Column], lagCol: String,
+                 outCol: String, partitions: Int = 0): DataFrame = {
+    require(groupCols.nonEmpty, "groupedLag needs a group column")
+    val lIdx = df.schema.fieldIndex(lagCol)
+    scan("groupedLag", df, groupCols, orderCols, partitions,
+      Seq(df.schema(lIdx).copy(name = outCol, nullable = true)),
+      Carry[Any](null, (_, r) => r.get(lIdx), (_, b) => b,
+        (prev, _, _) => Seq(prev)))
   }
 
   /** Z-order layout: range-partition + sort the table by the Morton

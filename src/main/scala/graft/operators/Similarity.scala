@@ -83,15 +83,6 @@ object Similarity {
     Seq.fill(planes)(Seq.fill(dim)(rng.nextGaussian()))
   }
 
-  /** Sign-bit LSH bucket id of an embedding column. */
-  def lshBucket(embedding: Column, planes: Seq[Seq[Double]]): Column =
-    planes.zipWithIndex.map { case (p, i) =>
-      val dot = aggregate(
-        zip_with(embedding, typedlit(p), (x, w) => x.cast("double") * w),
-        lit(0.0), (acc, v) => acc + v)
-      when(dot >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** All table buckets in one fused pass (custom codegen expression
     * LshBuckets — the plane matrix becomes a codegen reference object;
     * one loop instead of tables×planes aggregate HOFs per row).

@@ -1342,25 +1342,23 @@ object StatsQueriesB {
     // the profile is engine-exact. The pre-r11 form paid a per-type
     // single-task sort TWICE (lag sequencing + rank percentiles over
     // fact-grain rows in ~5 schema-bounded partitions); now both ride
-    // ScaleOps.groupedRank — consecutive events pair by a rank-
-    // adjacency self-join (rk = rk−1 on the type key; both sides read
-    // the same ranked frame, so the join exchange is reused), and the
-    // percentile ranks come off a second groupedRank of the gaps.
+    // ScaleOps' two-pass scan — consecutive events pair by
+    // groupedLag on the type key (a group's first event has no gap
+    // and is filtered out, as in the oracle), and the percentile ranks
+    // come off a groupedRank of the gaps.
     // The sketch path at extreme group cardinality is q128's MRL /
     // q63's histogram, documented there.
     "q203_gap_percentiles" -> ((s, dir) => {
-      import graft.operators.ScaleOps.groupedRank
-      val seqd = groupedRank(
-        Tables.events(s, dir)
-          .select(col("event_type"), col("ts"), col("event_id")),
-        Seq("event_type"), Seq(col("ts").asc, col("event_id").asc),
-        rankCol = "sq").drop("n_grp")
-      val prev = seqd.select(col("event_type"),
-        (col("sq") + 1L).as("sq"), col("ts").as("ts_prev"))
-      val gaps = seqd.join(prev, Seq("event_type", "sq"))
+      import graft.operators.ScaleOps.{groupedLag, groupedRank}
+      val gaps = groupedLag(
+          Tables.events(s, dir)
+            .select(col("event_type"), col("ts"), col("event_id")),
+          Seq("event_type"), Seq(col("ts").asc, col("event_id").asc),
+          "ts", "ts_prev")
         .select(col("event_type"), col("event_id"),
           ((unix_micros(col("ts")) - unix_micros(col("ts_prev")))
             / 1000000L).cast("long").as("gap_s"))
+        .filter(col("gap_s").isNotNull)
       groupedRank(gaps, Seq("event_type"),
           Seq(col("gap_s").asc, col("event_id").asc),
           rankCol = "rk", countCol = "n")

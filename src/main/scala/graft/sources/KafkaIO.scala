@@ -137,32 +137,6 @@ object KafkaIO {
     decoded.select(cols: _*)
   }
 
-  /** [[purchasesStream]] with per-record writer-schema resolution: the
-    * topic may carry several registered schema versions and each record
-    * resolves its writer schema from the Confluent frame id — the
-    * offline-injectable analogue of the reference's
-    * CachedSchemaRegistryClient (dsl/PriceAlertsApp.java:33-38). In
-    * production `writerSchemasById` is loaded from the registry once at
-    * planning time (ids are immutable, so a static snapshot is safe);
-    * `permissive` nulls records with unknown ids instead of failing.
-    */
-  def purchasesStreamResolving(spark: SparkSession, bootstrap: String,
-                               writerSchemasById: Map[Int, String],
-                               topic: String = "purchases",
-                               permissive: Boolean = false): DataFrame = {
-    GraftFunctions.register(spark)
-    spark.readStream.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topic)
-      .option("startingOffsets", "latest")
-      .load()
-      .select(GraftFunctions.fromAvroResolving(col("value"), purchaseAvroSchema,
-          writerSchemasById, permissive).as("p"),
-        col("timestamp").as("ts"))
-      .select(col("p.id").as("id"), col("p.quantity").as("quantity"),
-        col("p.productid").as("productid"), col("ts"))
-  }
-
   /** S2/S4 — the products dimension: read the topic as a bounded batch
     * (earliest→latest) and compact to latest-per-key — the GlobalKTable
     * materialization. Re-run per deploy or wrapped in a refresh loop;

@@ -39,10 +39,7 @@ object PriceAlertsStream {
   def dslAlertsUpdate(purchasesStream: DataFrame, products: DataFrame,
                       threshold: Double = PriceAlerts.DslThreshold,
                       windowSize: String = "1 minute"): DataFrame =
-    PriceAlerts.alerts(
-      PriceAlerts.windowedRevenue(
-        PriceAlerts.purchasesWithProducts(purchasesStream, products), windowSize),
-      threshold)
+    PriceAlerts.dslPipeline(purchasesStream, products, threshold, windowSize)
 
   /** Processor variant: append-mode with watermark — one emission per
     * closed window, state cleaned up behind the watermark.
@@ -50,13 +47,9 @@ object PriceAlertsStream {
   def processorAlertsAppend(purchasesStream: DataFrame, products: DataFrame,
                             threshold: Double = PriceAlerts.ProcessorThreshold,
                             windowSize: String = "1 minute",
-                            watermarkDelay: String = "1 minute"): DataFrame = {
-    val withWm = purchasesStream.withWatermark("ts", watermarkDelay)
-    PriceAlerts.alerts(
-      PriceAlerts.windowedRevenue(
-        PriceAlerts.purchasesWithProducts(withWm, products), windowSize),
-      threshold)
-  }
+                            watermarkDelay: String = "1 minute"): DataFrame =
+    PriceAlerts.dslPipeline(purchasesStream.withWatermark("ts", watermarkDelay),
+      products, threshold, windowSize)
 
   /** Streaming latest-per-key dimension compaction (A3): when the
     * products dimension arrives as a changelog stream, reduce it to

@@ -33,7 +33,32 @@ object ProcessorAlerts {
   /** Open windows per product: window-start millis → running sum. */
   case class WindowSums(sums: Map[Long, Double])
 
-  private val WindowMillis = 60000L
+  private[streaming] val WindowMillis = 60000L
+
+  /** Fold purchase amounts into per-window sums keyed by window-start
+    * millis (A2: get-or-init + add).
+    */
+  private[streaming] def addToWindows(prior: Map[Long, Double],
+      rows: Iterator[PurchaseAmount]): Map[Long, Double] =
+    rows.foldLeft(prior) { (acc, p) =>
+      val w = p.ts.getTime - p.ts.getTime % WindowMillis
+      acc.updated(w, acc.getOrElse(w, 0.0) + p.amount)
+    }
+
+  /** Close every window whose end is at or before `bound`: returns the
+    * alerts of the closed windows over `threshold`, in window order,
+    * and the windows still open.
+    */
+  private[streaming] def closeWindows(productId: String,
+      windows: Map[Long, Double], bound: Long,
+      threshold: Double): (Seq[Alert], Map[Long, Double]) = {
+    val (closed, open) = windows.partition {
+      case (w, _) => w + WindowMillis <= bound
+    }
+    (closed.toSeq.sortBy(_._1).collect {
+      case (w, sum) if sum > threshold => Alert(productId, new Timestamp(w), sum)
+    }, open)
+  }
 
   /** Build the typed purchase-amount stream from the joined projection
     * (purchasesWithProducts output).
@@ -64,11 +89,8 @@ object ProcessorAlerts {
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
         (productId: String, rows: Iterator[PurchaseAmount],
          state: GroupState[WindowSums]) =>
-          val prior = state.getOption.map(_.sums).getOrElse(Map.empty[Long, Double])
-          val updated = rows.foldLeft(prior) { (acc, p) =>
-            val w = p.ts.getTime - p.ts.getTime % WindowMillis
-            acc.updated(w, acc.getOrElse(w, 0.0) + p.amount)
-          }
+          val updated = addToWindows(
+            state.getOption.map(_.sums).getOrElse(Map.empty), rows)
           // the punctuator bound: close every window whose end is
           // before the current wall clock (reference: nearestMinutesTs).
           // Evaluated on BOTH paths, not just hasTimedOut: Spark's
@@ -84,15 +106,10 @@ object ProcessorAlerts {
             val now = System.currentTimeMillis()
             now - now % WindowMillis
           }
-          val (closed, open) = updated.partition {
-            case (w, _) => w + WindowMillis <= nowFloor
-          }
+          val (out, open) = closeWindows(productId, updated, nowFloor, threshold)
           if (open.isEmpty) state.remove() else state.update(WindowSums(open))
           if (state.exists) state.setTimeoutDuration(punctuatePeriod)
-          closed.toSeq.sortBy(_._1).collect {
-            case (w, sum) if sum > threshold =>
-              Alert(productId, new Timestamp(w), sum)
-          }.iterator
+          out.iterator
       }
   }
 
@@ -111,20 +128,10 @@ object ProcessorAlerts {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (productId: String, rows: Iterator[PurchaseAmount],
          state: GroupState[WindowSums]) =>
-          val prior = state.getOption.map(_.sums).getOrElse(Map.empty[Long, Double])
-          // fold this batch into the window sums (A2: get-or-init + add)
-          val updated = rows.foldLeft(prior) { (acc, p) =>
-            val w = p.ts.getTime - p.ts.getTime % WindowMillis
-            acc.updated(w, acc.getOrElse(w, 0.0) + p.amount)
-          }
-          val watermark = state.getCurrentWatermarkMs()
-          val (closed, open) = updated.partition {
-            case (w, _) => w + WindowMillis <= watermark
-          }
-          val out = closed.toSeq.sortBy(_._1).collect {
-            case (w, sum) if sum > threshold =>
-              Alert(productId, new Timestamp(w), sum)
-          }
+          val updated = addToWindows(
+            state.getOption.map(_.sums).getOrElse(Map.empty), rows)
+          val (out, open) = closeWindows(productId, updated,
+            state.getCurrentWatermarkMs(), threshold)
           if (open.isEmpty) state.remove()
           else {
             state.update(WindowSums(open))

@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor,
   TimeMode, TimerValues, TTLConfig}
 import org.apache.spark.sql.streaming.ValueState
 
-import ProcessorAlerts.{Alert, PurchaseAmount}
+import ProcessorAlerts.{addToWindows, closeWindows, Alert, PurchaseAmount, WindowMillis}
 
 /** The reference's stateful processor on Spark 4's `transformWithState`
   * (the successor of flatMapGroupsWithState): typed per-key state
@@ -27,8 +25,6 @@ import ProcessorAlerts.{Alert, PurchaseAmount}
   */
 object TwsAlerts {
 
-  private val WindowMillis = 60000L
-
   class AlertProcessor(threshold: Double)
       extends StatefulProcessor[String, PurchaseAmount, Alert] {
     @transient private var windows: ValueState[Map[Long, Double]] = _
@@ -40,11 +36,8 @@ object TwsAlerts {
 
     override def handleInputRows(key: String, rows: Iterator[PurchaseAmount],
                                  timerValues: TimerValues): Iterator[Alert] = {
-      val prior = Option(windows.get()).getOrElse(Map.empty[Long, Double])
-      val updated = rows.foldLeft(prior) { (acc, p) =>
-        val w = p.ts.getTime - p.ts.getTime % WindowMillis
-        acc.updated(w, acc.getOrElse(w, 0.0) + p.amount)
-      }
+      val updated = addToWindows(
+        Option(windows.get()).getOrElse(Map.empty), rows)
       windows.update(updated)
       // punctuator: wake when the earliest open window can close
       if (updated.nonEmpty) {
@@ -55,17 +48,15 @@ object TwsAlerts {
 
     override def handleExpiredTimer(key: String, timerValues: TimerValues,
                                     expiredTimerInfo: ExpiredTimerInfo): Iterator[Alert] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val all = Option(windows.get()).getOrElse(Map.empty[Long, Double])
-      val (closed, open) = all.partition { case (w, _) => w + WindowMillis <= wm }
+      val (out, open) = closeWindows(key,
+        Option(windows.get()).getOrElse(Map.empty),
+        timerValues.getCurrentWatermarkInMs(), threshold)
       if (open.isEmpty) windows.clear()
       else {
         windows.update(open)
         getHandle.registerTimer(open.keys.min + WindowMillis)
       }
-      closed.toSeq.sortBy(_._1).collect {
-        case (w, sum) if sum > threshold => Alert(key, new Timestamp(w), sum)
-      }.iterator
+      out.iterator
     }
   }
 

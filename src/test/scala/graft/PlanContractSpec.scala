@@ -552,13 +552,14 @@ class PlanContractSpec extends SparkSpec {
       assert(rankWindows.isEmpty,
         s"$q: rank window regressed back in:\n${rankWindows.mkString("\n")}")
     }
-    // the grouped-cumsum/fill trio: q159's per-source budget fill,
-    // q200's inlined twin, and q211's brand-keyed as-of carries must
-    // carry NO ordered window at all — running sums ride
-    // ScaleOps.groupedCumSum and carries ride groupedFill (q200 keeps
-    // its md5-keyed dedup window: entity-hash partitions, unordered)
+    // the grouped-cumsum/fill/lag set: q159's per-source budget fill,
+    // q200's inlined twin, q211's brand-keyed as-of carries and q203's
+    // per-type gap pairing must carry NO ordered window at all —
+    // running sums ride ScaleOps.groupedCumSum, carries ride
+    // groupedFill and the gap pairing rides groupedLag (q200 keeps its
+    // md5-keyed dedup window: entity-hash partitions, unordered)
     for (q <- Seq("q159_token_budget_fill", "q200_clean_pipeline",
-        "q211_cold_parts")) {
+        "q211_cold_parts", "q203_gap_percentiles")) {
       val ordered = optimized(q).collect {
         case w: LWindow if w.orderSpec.nonEmpty => w
       }

@@ -208,9 +208,9 @@ class ScaleOpsSpec extends SparkSpec {
       .select(col("o_orderkey"), col("o_totalprice"))
     val ranked = ScaleOps.distributedRank(o,
       Seq(col("o_totalprice"), col("o_orderkey")), partitions = 7)
-    // no window operator anywhere: ranks come from zipWithIndex over
-    // the range-shuffled RDD, so there is nothing that could collapse
-    // the frame to one task
+    // no window operator anywhere: ranks come from the offset-seeded
+    // scan over the range-shuffled RDD, so there is nothing that could
+    // collapse the frame to one task
     val plan = ranked.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("window"),
       s"expected a window-free plan:\n$plan")
@@ -351,6 +351,36 @@ class ScaleOpsSpec extends SparkSpec {
     }
   }
 
+  test("groupedLag property: matches per-group lag, nulls not skipped") {
+    import org.apache.spark.sql.expressions.Window
+    val rng = new scala.util.Random(37)
+    for (trial <- 1 to 5) {
+      val n = 40 + rng.nextInt(300)
+      val parts = 1 + rng.nextInt(9)
+      val nGroups = 1 + rng.nextInt(4)
+      val data = (1 to n).map { i =>
+        val v: java.lang.Long =
+          if (rng.nextInt(3) == 0) null else java.lang.Long.valueOf(rng.nextInt(99).toLong)
+        val g: String = // null group keys = a window's NULL partition
+          if (rng.nextInt(4) == 0) null else rng.nextInt(nGroups).toString
+        (i.toLong, g, rng.nextInt(9).toLong, v)
+      }
+      val df = data.toDF("id", "g", "t", "v").repartition(4)
+      val ord = Seq(col("t").asc, col("id").asc)
+      val expected = df
+        .withColumn("p", lag(col("v"), 1).over(
+          Window.partitionBy(col("g")).orderBy(ord: _*)))
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(4)) null else r.getLong(4))).toMap
+      val got = ScaleOps.groupedLag(df, Seq("g"), ord, "v", "p",
+          partitions = parts)
+        .collect().map(r => (r.getLong(0),
+          if (r.isNullAt(4)) null else r.getLong(4))).toMap
+      assert(got == expected,
+        s"trial $trial (n=$n groups=$nGroups parts=$parts) diverged")
+    }
+  }
+
   test("grouped primitives fail fast on an entity-grained group key") {
     // MaxGroupsPerPartition+1 distinct keys forced into ONE partition:
     // each primitive's offset pass must throw the named guard error
@@ -369,7 +399,9 @@ class ScaleOpsSpec extends SparkSpec {
         ("groupedCumSum", () => ScaleOps.groupedCumSum(
           df, Seq("g"), Seq(col("v").asc), "v", partitions = 1)),
         ("groupedFill", () => ScaleOps.groupedFill(
-          df, Seq("g"), Seq(col("v").asc), "v", "f", partitions = 1)))) {
+          df, Seq("g"), Seq(col("v").asc), "v", "f", partitions = 1)),
+        ("groupedLag", () => ScaleOps.groupedLag(
+          df, Seq("g"), Seq(col("v").asc), "v", "p", partitions = 1)))) {
       val e = intercept[Exception] { run() }
       assert(chain(e).exists(m =>
         m.contains("entity-grained") && m.contains(label)),
@@ -382,8 +414,8 @@ class ScaleOpsSpec extends SparkSpec {
     // holds ~31k groups — UNDER the executor-side per-partition cap —
     // but the driver's running total must abort the offset collect as
     // task results arrive (the many-partition regime the per-partition
-    // cap cannot see). The guarded collector is shared by all three
-    // grouped primitives, so one primitive suffices here.
+    // cap cannot see). Every two-pass primitive collects through the
+    // same scan, so one primitive suffices here.
     val n = ScaleOps.MaxGroupsTotal + 1
     val df = spark.range(0L, n, 1L, 32)
       .select(col("id").as("g"), col("id").as("v"))

@@ -63,8 +63,6 @@ class SourceLintSpec extends AnyFunSuite {
         (20, "artifact runner: batch-vs-stream row comparisons on fixture data"),
       "src/main/scala/graft/StreamBench.scala" ->
         (1, "artifact runner: 64 synthetic PNG payloads for the image-dedup shape, driver-built fixture"),
-      "src/main/scala/graft/operators/ScaleOps.scala" ->
-        (1, "distributedCumSum per-partition (count,total) offsets: numPartitions pairs. The grouped primitives collect through collectOffsetsGuarded (runJob with an incremental MaxGroupsTotal abort), not collect()"),
       "src/main/scala/graft/operators/Similarity.scala" ->
         (6, "k-means/PQ/coreset trainers: <= sampleN rows or 1 row per round, documented"),
       "src/main/scala/graft/operators/Sketches.scala" ->
@@ -95,7 +93,7 @@ class SourceLintSpec extends AnyFunSuite {
       "src/main/scala/graft/operators/Multimodal.scala" ->
         (6, "ImageIO/AudioSystem/video codecs: no Catalyst expression can wrap them"),
       "src/main/scala/graft/operators/ScaleOps.scala" ->
-        (8, "distributedCumSum + groupedRank + groupedCumSum + groupedFill: per-partition (per-group) state + offset-seeded second pass over reused shuffle files"),
+        (2, "the one two-pass scan behind every rank/cumsum/fill/lag primitive: per-partition per-group summary (collected through collectOffsetsGuarded) + offset-seeded second pass over reused shuffle files"),
       "src/main/scala/graft/sources/AvroFileIO.scala" ->
         (1, "OCF container framing: one Avro container per partition"),
       "src/main/scala/graft/sources/WarcIO.scala" ->
